@@ -6,7 +6,7 @@ measurement — this file holds the guide-§1 instrumentation):
   sink) and labelled jobs;
 * ``--explain DIR --suffix before|after``: capture ``explain("formatted")``
   for each query into DIR/<query>_<suffix>.txt;
-* encode phase timing via B2T_TIMING=1 (see manifest._phase_timer).
+* per-layer encode timing lives in ``perfbench/run.py --trace 1``.
 
 Usage:
     python bench_extra.py [--queries a,b,c] [--passes N] \

@@ -7,6 +7,7 @@ batches -> buffered parquet sink, ``bids2table/crawler.py:90-136`` +
     df -> with_group (salted, broadcast join)
        -> groupBy(pt, grp).applyInArrow(encode_group)    # ONE shuffle
        -> block rows (pt, grp, block_id, column, codec, payload, ...)
+          + one group row per group (GROUP_CODEC, feeds the manifest)
 
 Inside each group the rows are sorted by the key columns (the reference
 sorts every finalized batch, ``bids2table/table.py:122-125`` — here it is
@@ -33,24 +34,47 @@ BLOCKS_DDL_WITH_IDX = BLOCKS_SCHEMA_DDL.replace(
     "column string", "column string, col_idx int"
 )
 
-# failure-isolation sentinel (reference behavior: per-file errors become
-# side-channel rows and the crawl continues, bids2table/crawler.py:92):
-# a group whose encode raises yields ONE row with this codec; the manifest
-# marks the group status='failed' and a resumed run re-attempts it.
-ERROR_CODEC = "__error__"
+# Every encode task appends ONE row with this codec next to its data blocks:
+# the group's own record of what it wrote, taken from the worker that wrote
+# it (the reference's processed log, bids2table/logging.py:98-131).
+# encode_job builds the manifest from these rows.  A group whose encode
+# raises emits only this row, with ``error`` set (reference behavior:
+# per-file errors become side-channel rows and the crawl continues,
+# bids2table/crawler.py:92); the manifest marks it status='failed' and a
+# resumed run re-attempts it.
+GROUP_CODEC = "__group__"
 
 
-def error_row(pt: str, grp: str, exc: Exception) -> dict:
+def group_row(pt: str, grp: str, blocks: list[dict], exc: Exception | None = None) -> dict:
+    """The group row summarizing ``blocks`` (the group's data block rows).
+
+    Carries the group's n_rows / orig_bytes / enc_bytes; ``checksum`` is the
+    sha256 of the sorted ``column:block_id:checksum`` list; ``meta`` is JSON
+    with ``n_blocks``, the sorted distinct ``column:codec`` list (NOT a map:
+    the per-block local chooser may pick different codecs for different
+    blocks of one column) and ``error`` (null unless ``exc``)."""
+    import hashlib
     import json
     import traceback
 
-    msg = "".join(traceback.format_exception_only(type(exc), exc)).strip()[:2000]
+    error = None
+    if exc is not None:
+        error = "".join(traceback.format_exception_only(type(exc), exc)).strip()[:2000]
+    block_sums = sorted(f"{r['column']}:{r['block_id']}:{r['checksum']}" for r in blocks)
+    meta = {
+        "n_blocks": len(blocks),
+        "codecs": sorted({f"{r['column']}:{r['codec']}" for r in blocks}),
+        "error": error,
+    }
     return {
         "pt": pt, "grp": grp, "block_id": -1, "column": "", "col_idx": -1,
-        "codec": ERROR_CODEC, "phys": "", "n_rows": 0, "n_nulls": 0,
-        "meta": json.dumps({"error": msg}), "payload": b"", "orig_bytes": 0,
-        "enc_bytes": 0, "checksum": "", "zmin": None, "zmax": None,
-        "cmin": None, "cmax": None,
+        "codec": GROUP_CODEC, "phys": "",
+        "n_rows": sum(r["n_rows"] for r in blocks if r["col_idx"] == 0),
+        "n_nulls": 0, "meta": json.dumps(meta), "payload": b"",
+        "orig_bytes": sum(r["orig_bytes"] for r in blocks),
+        "enc_bytes": sum(r["enc_bytes"] for r in blocks),
+        "checksum": hashlib.sha256(",".join(block_sums).encode()).hexdigest(),
+        "zmin": None, "zmax": None, "cmin": None, "cmax": None,
     }
 
 
@@ -118,10 +142,13 @@ def encode_table(
     """Encode every data column of ``df`` into block rows.
 
     ``df`` must contain ``pt_col``; all other columns are encoded.  Returns a
-    DataFrame with BLOCKS_DDL_WITH_IDX schema.  ``splan`` lets callers reuse a
-    precomputed salt plan (it is also the resume granularity, so reusing it
-    keeps groups stable across runs).
+    DataFrame with BLOCKS_DDL_WITH_IDX schema holding the data blocks only
+    (the group rows serve encode_job's manifest).  ``splan`` lets callers
+    reuse a precomputed salt plan (it is also the resume granularity, so
+    reusing it keeps groups stable across runs).
     """
+    from pyspark.sql import functions as F
+
     df = flatten_struct_columns(df)
     if splan is None:
         splan = salt_plan(df, pt_col=pt_col, target_group_rows=target_group_rows)
@@ -129,7 +156,7 @@ def encode_table(
     return encode_grouped(
         grouped, key_cols=key_cols, pt_col=pt_col, plan=plan,
         block_rows=block_rows, num_partitions=sum(splan.values()),
-    )
+    ).filter(F.col("codec") != GROUP_CODEC)
 
 
 _BLOCKS_ARROW_FIELDS = [
@@ -185,8 +212,9 @@ def make_encode_fn_arrow(
                     row["col_idx"] = ci
                     row["zmin"], row["zmax"] = zmin, zmax
                     rows.append(row)
+            rows.append(group_row(pt, grp, rows))
         except Exception as exc:  # noqa: BLE001 — isolate the poisoned group
-            rows = [error_row(pt, grp, exc)]
+            rows = [group_row(pt, grp, [], exc)]
         arrays = [
             pa.array([r[name] for r in rows], type=schema.field(name).type)
             for name, _ in _BLOCKS_ARROW_FIELDS
@@ -205,6 +233,7 @@ def encode_grouped(
     num_partitions: int | None = None,
 ):
     """Encode a DataFrame that already carries the ``grp`` salt column.
+    Each group yields its data block rows plus one group row (GROUP_CODEC).
 
     ``num_partitions`` should be ~the number of (pt, grp) groups: with the
     default shuffle partition count, hash collisions pile several groups

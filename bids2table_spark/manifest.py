@@ -9,12 +9,24 @@ re-imagined as a small Parquet table next to the encoded blocks:
       salt_plan/…             persisted {scope, pt -> n_salts} (resume identity)
 
 Resume = left anti-join of pending groups against committed manifest rows
-(the reference's ``filter_paths`` join, ``logging.py:133-164``).  Blocks are
-written before their manifest rows; a crash between the two leaves orphan
-blocks that are never read, because readers inner-join blocks with the
-latest committed manifest row per group on (pt, grp, run_id) — the poor
-man's Iceberg snapshot (seam kept so an Iceberg catalog can replace the
-path layout; see sources/).
+(the reference's ``filter_paths`` join, ``logging.py:133-164``).  The
+commit protocol of one encode run:
+
+1. each encode task writes its data blocks plus ONE group row (codec
+   ``__group__``, see ``encode.group_row``) into the run's own directory;
+2. the driver collects those group rows and merges them against this
+   attempt's pending groups: one row per (pt, grp), a committed copy over a
+   failed one, a zero-row row per empty salt bucket, compaction tombstones;
+3. ONE manifest append writes them — the commit point;
+4. the summary is read back: the latest manifest row per group of the run.
+
+A crash before step 3 leaves orphan blocks that are never read: readers
+inner-join blocks with the latest committed manifest row per group on
+(pt, grp, run_id) — the poor man's Iceberg snapshot (seam kept so an
+Iceberg catalog can replace the path layout; see sources/).  A retry of the
+run_id lands the group again next to its orphans; with unique sort keys
+the copies are bit-identical, the merge keeps one manifest row and decode
+one block per (chunk, column).
 
 Scale notes (the three round-1 scale-killers this layout fixes):
 
@@ -31,13 +43,15 @@ Scale notes (the three round-1 scale-killers this layout fixes):
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
+from collections import namedtuple
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .decode import decode_table
-from .encode import ERROR_CODEC, encode_grouped, flatten_struct_columns
+from .encode import BLOCKS_DDL_WITH_IDX, GROUP_CODEC, encode_grouped, flatten_struct_columns
 from .partitioning import DEFAULT_GROUP_ROWS, salt_plan, with_group
 
 MANIFEST_DDL = (
@@ -45,6 +59,10 @@ MANIFEST_DDL = (
     "orig_bytes long, enc_bytes long, codecs string, checksum string, "
     "status string, committed_at timestamp, error string"
 )
+# a manifest row as the driver builds it; committed_at is stamped at write
+_ROW_DDL = MANIFEST_DDL.replace("committed_at timestamp, ", "")
+_ManifestRow = namedtuple("_ManifestRow", [f.split()[0] for f in _ROW_DDL.split(", ")])
+_SALT_PLAN_DDL = "scope string, pt string, n_salts int"
 
 
 def _paths(out_dir: str) -> tuple[str, str, str]:
@@ -52,46 +70,31 @@ def _paths(out_dir: str) -> tuple[str, str, str]:
     return f"{out_dir}/blocks", f"{out_dir}/manifest", f"{out_dir}/salt_plan"
 
 
-from contextlib import contextmanager
+def _manifest_row(pt: str, grp: str, run_id: str, g=None) -> _ManifestRow:
+    """One manifest row from a landed group row ``g`` — or, with ``g=None``,
+    a committed zero-row group: an empty salt bucket or a compaction
+    tombstone."""
+    if g is None:
+        return _ManifestRow(pt, grp, run_id, 0, 0, 0, 0, "[]", "", "committed", None)
+    meta = json.loads(g["meta"])
+    # the manifest's error column holds {"error": message} JSON
+    error = json.dumps({"error": meta["error"]}) if meta["error"] else None
+    return _ManifestRow(
+        pt, grp, run_id, meta["n_blocks"], g["n_rows"], g["orig_bytes"],
+        g["enc_bytes"], json.dumps(meta["codecs"], separators=(",", ":"), ensure_ascii=False),
+        g["checksum"], "failed" if error else "committed", error,
+    )
 
 
-@contextmanager
-def _no_aqe(spark: SparkSession):
-    """Scope-disable adaptive execution for METADATA-sized queries.
+def _append_manifest(spark: SparkSession, mpath: str, rows: list[_ManifestRow]) -> None:
+    """ONE manifest append of ``rows`` — the commit point: new groups, gap
+    rows and any supersede become visible together.  One file per commit
+    (Iceberg-style); the rows are bounded by the group universe."""
+    from .session import local_df
 
-    AQE materializes every shuffle as its own query-stage job; on the
-    manifest-derivation tail of encode_job (a read of the just-written
-    ~MB-scale block metadata + a groupBy bounded by the group universe,
-    never input-sized) that turned one aggregate into SEVEN scheduled jobs
-    (round-6 job trace).  With AQE off these run as one classic job each.
-    The conf is session-wide, so the scope is kept as small as possible and
-    restored immediately (concurrent encode_jobs from driver threads would
-    briefly share the setting — worst case they lose AQE on one small
-    query, never correctness)."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
-class _phase_timer:
-    """Env-gated (B2T_TIMING=1) wall-clock phase log for encode_job — the
-    job is many small Spark actions and one big one; this attributes the
-    total without a profiler run."""
-
-    def __init__(self, tag: str) -> None:
-        import time
-
-        self.on = bool(os.environ.get("B2T_TIMING"))
-        self.tag, self.t0, self.clk = tag, time.time(), time.time
-
-    def lap(self, phase: str) -> None:
-        if self.on:
-            t = self.clk()
-            print(f"[{self.tag}] {phase}: {t - self.t0:.2f}s", flush=True)
-            self.t0 = t
+    cols = [f.split()[0] for f in MANIFEST_DDL.split(", ")]
+    m = local_df(spark, rows, _ROW_DDL).withColumn("committed_at", F.current_timestamp())
+    m.select(*cols).coalesce(1).write.mode("append").parquet(mpath)
 
 
 def _colmeta_path(out_dir: str) -> str:
@@ -159,8 +162,6 @@ def _save_colmeta(
     compare a resume against the columns *its own prefix* committed — the
     global union would let a wider append under another prefix disarm the
     guard for the original one."""
-    import json
-
     spark = df.sparkSession
     existing = _load_colmeta(out_dir, spark)
     existing.pop("__keyinfo__", None)
@@ -207,8 +208,6 @@ def _save_colmeta(
 
 
 def _load_colmeta(out_dir: str, spark: SparkSession | None = None) -> dict[str, dict]:
-    import json
-
     p = _colmeta_path(out_dir).removeprefix("file://")
     if "://" in p:
         if spark is None:
@@ -239,13 +238,6 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
         return spark.read.parquet(mpath)
     except Exception:
         return None
-
-
-def committed_groups(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    m = read_manifest(spark, out_dir)
-    if m is None:
-        return None
-    return m.filter(F.col("status") == "committed").select("pt", "grp").distinct()
 
 
 def _latest_committed(m: DataFrame, pt_col: str = "pt", as_of=None) -> DataFrame:
@@ -321,21 +313,23 @@ def snapshots(spark: SparkSession, out_dir: str) -> DataFrame:
 def load_salt_plan(
     spark: SparkSession, out_dir: str, scope: str = ""
 ) -> dict[str, int]:
-    """Persisted salt plan for ``scope`` (empty = the batch job)."""
+    """Persisted salt plan for ``scope`` (empty = the batch job).  An
+    unreadable part file (a torn write from another tool) is skipped; the
+    rest of the plan still holds."""
     _, _, ppath = _paths(out_dir)
     if not _exists(ppath):
         return {}
-    try:
-        rows = (
-            spark.read.parquet(ppath)
-            .filter(F.col("scope") == scope)
-            .groupBy("pt")
-            .agg(F.min("n_salts").alias("n_salts"))  # deterministic under dup appends
-            .collect()
-        )
-    except Exception:
-        return {}
+    rows = (
+        spark.read.schema(_SALT_PLAN_DDL)
+        .option("ignoreCorruptFiles", "true")
+        .parquet(ppath)
+        .filter(F.col("scope") == scope)
+        .groupBy("pt")
+        .agg(F.min("n_salts").alias("n_salts"))  # deterministic under dup appends
+        .collect()
+    )
     return {r["pt"]: int(r["n_salts"]) for r in rows}
+
 
 
 def _append_salt_plan(
@@ -343,14 +337,14 @@ def _append_salt_plan(
 ) -> None:
     """Persist new (scope, pt, n_salts) rows.  The plan is a handful of
     rows, so on a local filesystem it is written straight from the driver
-    with pyarrow — one fewer Spark job per encode (round 6); the file name
-    is unique, so concurrent appends never clobber.  Non-local URIs keep
-    the Spark write (the driver has no direct filesystem there)."""
+    with pyarrow — one fewer Spark job per encode (round 6) — to a hidden
+    temp name and then renamed into place, so a reader never sees a torn
+    file; the file name is unique, so concurrent appends never clobber.
+    Non-local URIs keep the Spark write (the driver has no direct
+    filesystem there)."""
     rows = sorted(new_pts.items())
     local = ppath.removeprefix("file://")
     if "://" not in local:
-        import uuid
-
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -362,14 +356,15 @@ def _append_salt_plan(
                 "n_salts": pa.array([int(n) for _, n in rows], pa.int32()),
             }
         )
-        pq.write_table(tbl, os.path.join(local, f"part-{uuid.uuid4().hex}.parquet"))
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(local, f".{name}.tmp")
+        pq.write_table(tbl, tmp)
+        os.replace(tmp, os.path.join(local, name))
         return
     from .session import local_df
 
     local_df(
-        spark,
-        [(scope, pt, int(n)) for pt, n in rows],
-        "scope string, pt string, n_salts int",
+        spark, [(scope, pt, int(n)) for pt, n in rows], _SALT_PLAN_DDL
     ).coalesce(1).write.mode("append").parquet(ppath)
 
 
@@ -425,7 +420,7 @@ def encode_job(
     verify_growth: bool = True,
     on_new_columns: str = "error",
     max_group_universe: int = 4_000_000,
-    _extra_manifest: DataFrame | None = None,
+    _superseded: list[tuple[str, str]] | None = None,
 ) -> dict:
     """Encode ``df`` into out_dir, skipping already-committed groups.
 
@@ -528,7 +523,6 @@ def encode_job(
     pre_flat_df = df  # colmeta is saved post-growth-check: metadata sits on
     # the original top-level fields (struct parents included)
     df = fdf
-    _pt = _phase_timer(run_id)
     splan = resolve_salt_plan(
         spark, df, out_dir, scope=group_prefix, pt_col=pt_col,
         target_group_rows=target_group_rows,
@@ -559,8 +553,6 @@ def encode_job(
     ]
     from .session import local_df
 
-    _pt.lap("salt_plan")
-    pending = local_df(spark, all_groups, f"{pt_col} string, grp string")
     mdf = read_manifest(spark, out_dir) if resume else None
     done = None
     if mdf is not None:
@@ -585,10 +577,14 @@ def encode_job(
                 F.size(F.array_except(F.array(*[F.lit(c) for c in cols_now]), cols_arr)) > 0
             ) & (F.col("n_rows") > 0)
             done = latest.filter(~stale).select(pt_col, "grp")
-    n_pending = n_total
+    # pending is collected as a key list: bounded by the group universe
+    # the driver already holds, and the commit merges against it
+    pending_keys = all_groups
     if done is not None:
+        pending = local_df(spark, all_groups, "pt string, grp string")
         pending = pending.join(done, on=[pt_col, "grp"], how="left_anti")
-        n_pending = pending.count()
+        pending_keys = [(r[0], r[1]) for r in pending.collect()]
+    n_pending = len(pending_keys)
     if new_cols and n_pending < n_total and on_new_columns == "error":
         raise RuntimeError(
             "input schema grew since the committed run — resuming would "
@@ -609,7 +605,6 @@ def encode_job(
         out_dir, pre_flat_df, keyinfo,
         columns=None if legacy_dir else cols_now, prefix=group_prefix,
     )
-    _pt.lap("pending/resume")
     if done is not None and n_pending < n_total and verify_growth:
         latest = _latest_committed(mdf, pt_col).select(pt_col, "grp", "n_rows")
         in_counts = (
@@ -633,14 +628,16 @@ def encode_job(
                 "group_prefix, or pass verify_growth=False if the drift is expected."
             )
     if max_groups is not None:
-        pending = pending.orderBy(pt_col, "grp").limit(max_groups)
-        n_pending = pending.count()
+        pending_keys = sorted(pending_keys)[:max_groups]
+        n_pending = len(pending_keys)
+    # compaction tombstones: committed zero-row rows superseding the victims
+    tombstones = [_manifest_row(pt, grp, f"{run_id}.ts") for pt, grp in _superseded or ()]
     if n_pending == 0:
-        if _extra_manifest is not None:
+        if tombstones:
             # a retried compact_job whose encode fully committed last time
             # but crashed before the tombstone append lands the tombstones
             # here — the convergence path that makes compaction idempotent
-            _extra_manifest.write.mode("append").parquet(mpath)
+            _append_manifest(spark, mpath, tombstones)
         return {"run_id": run_id, "groups_total": n_total, "groups_encoded": 0,
                 "groups_skipped": n_total, "groups_failed": 0,
                 "orig_bytes": 0, "enc_bytes": 0, "n_rows": 0}
@@ -648,188 +645,79 @@ def encode_job(
     if n_pending == n_total:
         todo = grouped  # fresh encode: skip the semi-join entirely
     else:
+        pending = local_df(spark, pending_keys, "pt string, grp string")
         todo = grouped.join(F.broadcast(pending), on=[pt_col, "grp"], how="left_semi")
     blocks = encode_grouped(
         todo, key_cols=key_cols, pt_col=pt_col, plan=plan,
         block_rows=block_rows, num_partitions=n_pending,
     )
-
-    # 1) durable blocks first, into THIS run's own partition directory (no
+    # durable blocks first, into THIS run's own partition directory (no
     # per-pt hive dirs: each encode task emits one file; pt lives as a
-    # column, and readers select via the manifest join).  A run_path that
-    # already exists means a crashed-then-retried pinned run_id — the only
-    # case the block-level dedup window and the mpath-replay summary below
-    # are for; the common fresh run skips both (round-6: they cost two
-    # extra jobs per encode at identical output).
-    fresh_run = not _exists(run_path)
-    _pt.lap("pre_encode")
+    # column, and readers select via the manifest join)
     blocks.write.mode("append").option("compression", "zstd").parquet(run_path)
-    _pt.lap("encode_write")
-
-    # 2) … then manifest rows derived from what actually landed on disk.
-    # Reading run_path (not the blocks root) means an incremental run's job
-    # graph touches only its own output — never the accumulated history.
-    # The explicit schema keeps an all-empty-groups write (no part files)
-    # from failing schema inference, and the semi-join on THIS attempt's
-    # pending set keeps a crashed-then-retried pinned run_id from
-    # re-appending manifest rows for groups the first attempt already
-    # committed (the block-level dedup below fixes metrics, not row count).
-    from .encode import BLOCKS_DDL_WITH_IDX
-
-    written = spark.read.schema(BLOCKS_DDL_WITH_IDX).parquet(run_path).join(
-        F.broadcast(pending), on=[pt_col, "grp"], how="left_semi"
-    )
-    if not fresh_run:
-        # a crashed-then-retried run with a pinned run_id appends a second,
-        # bit-identical copy of some blocks; dedup so metrics stay exact
-        wd = Window.partitionBy(pt_col, "grp", "block_id", "column").orderBy("checksum")
-        written = (
-            written.withColumn("_rn", F.row_number().over(wd))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    is_data = F.col("codec") != ERROR_CODEC
-    manifest = (
-        written.groupBy(pt_col, "grp")
-        .agg(
-            F.sum(is_data.cast("long")).alias("n_blocks"),
-            F.sum(F.when(F.col("col_idx") == 0, F.col("n_rows")).otherwise(0)).alias("n_rows"),
-            F.sum("orig_bytes").alias("orig_bytes"),
-            F.sum("enc_bytes").alias("enc_bytes"),
-            # JSON array of distinct column:codec pairs — NOT a map: the
-            # per-block local chooser may legally pick different codecs for
-            # different blocks of one column, and duplicate map keys throw
-            F.to_json(
-                F.array_sort(
-                    F.array_distinct(
-                        F.collect_list(
-                            F.when(is_data, F.concat_ws(":", F.col("column"), F.col("codec")))
-                        )
-                    )
-                )
-            ).alias("codecs"),
-            F.sha2(
-                F.concat_ws(
-                    ",",
-                    F.sort_array(
-                        F.collect_list(
-                            F.when(
-                                is_data,
-                                F.concat_ws(":", F.col("column"), F.col("block_id"), F.col("checksum")),
-                            )
-                        )
-                    ),
-                ),
-                256,
-            ).alias("checksum"),
-            F.max(F.when(~is_data, F.col("meta"))).alias("error"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        # a group is failed only if it has NO data blocks: a retried pinned
-        # run_id leaves the previous attempt's error row in run_path next
-        # to the retry's data blocks, and the stale error must not poison
-        # the successful retry's manifest row
-        .withColumn(
-            "error", F.when(F.col("n_blocks") == 0, F.col("error"))
-        )
-        .withColumn(
-            "status",
-            F.when(F.col("error").isNotNull(), F.lit("failed")).otherwise(F.lit("committed")),
-        )
-        .withColumn("committed_at", F.current_timestamp())
-        .select(
-            pt_col, "grp", "run_id", "n_blocks", "n_rows", "orig_bytes",
-            "enc_bytes", "codecs", "checksum", "status", "committed_at", "error",
-        )
-    )
-    manifest = manifest.cache()  # one computation serves the write AND the
-    # empty-group gap check + fresh-run summary below (re-reading mpath
-    # cost an extra job/run)
-
-    # salt buckets that received ZERO conversations (hash imbalance on a
-    # small n_salts) produce no blocks and hence no manifest row above —
-    # without an explicit committed row they stay pending forever and every
-    # resume re-runs the whole encode.  DISTRIBUTED (round 5): the gap set
-    # is a left anti-join of pending against this run's manifest rows —
-    # written straight out, no `.collect()` of group keys back to the driver
-    # (the cached manifest frame serves it).
-    empties = (
-        pending.join(manifest.select(pt_col, "grp"), on=[pt_col, "grp"], how="left_anti")
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("n_blocks", F.lit(0).cast("long"))
-        .withColumn("n_rows", F.lit(0).cast("long"))
-        .withColumn("orig_bytes", F.lit(0).cast("long"))
-        .withColumn("enc_bytes", F.lit(0).cast("long"))
-        .withColumn("codecs", F.lit("[]"))
-        .withColumn("checksum", F.lit(""))
-        .withColumn("status", F.lit("committed"))
-        .withColumn("committed_at", F.current_timestamp())
-        .withColumn("error", F.lit(None).cast("string"))
-        .select(
-            pt_col, "grp", "run_id", "n_blocks", "n_rows", "orig_bytes",
-            "enc_bytes", "codecs", "checksum", "status", "committed_at",
-            "error",
-        )
-    )
-    # ONE manifest append (round 6: manifest + empties + compaction
-    # tombstones were three separate writes = three Spark jobs; the single
-    # append is also a cleaner commit point — new groups, gap rows and any
-    # supersede become visible together).  _extra_manifest rows (compaction
-    # tombstones) ride in the same append: a crash before this line leaves
-    # only unreachable orphan blocks.
-    to_write = manifest.unionByName(empties)
-    if _extra_manifest is not None:
-        to_write = to_write.unionByName(_extra_manifest)
-
-    def _summary_agg(m):
-        return m.agg(
-            F.sum((F.col("status") == "committed").cast("long")),
-            F.sum((F.col("status") == "failed").cast("long")),
-            F.sum("orig_bytes"), F.sum("enc_bytes"), F.sum("n_rows"),
-        ).collect()[0]
-
-    if fresh_run:
-        # this run's manifest rows are exactly manifest ∪ empties, each
-        # (pt, grp) once — aggregate those frames directly instead of
-        # re-reading mpath + a latest-row window (two jobs saved; the
-        # replay path below is only reachable for retried pinned run_ids).
-        # The agg runs BEFORE the append on purpose: manifest's plan reaches
-        # mpath through the resume anti-join, so appending first would
-        # invalidate the cache (recacheByPath) and the summary would
-        # recompute against a manifest that now contains this very run —
-        # every group "already committed", summary all zeros.
-        with _no_aqe(spark):
-            agg = _summary_agg(manifest.unionByName(empties))
-            # one manifest file per commit (Iceberg-style); without AQE's
-            # auto-coalesce the append would emit shuffle-partition-many
-            # tiny files.  coalesce, not repartition: the rows are bounded
-            # by the group universe, and the single post-exchange task is a
-            # metadata-sized write.
-            to_write.coalesce(1).write.mode("append").parquet(mpath)
-        _pt.lap("manifest_write")
-    else:
-        with _no_aqe(spark):
-            to_write.coalesce(1).write.mode("append").parquet(mpath)
-        _pt.lap("manifest_write")
-        m = spark.read.parquet(mpath).filter(F.col("run_id") == run_id)
-        # summary over the LATEST row per (pt, grp) within this run: a replayed
-        # epoch / retried pinned run_id re-encodes previously-failed groups and
-        # appends committed rows — the superseded failed rows must not keep
-        # counting (a streaming retry would loop forever on groups_failed > 0)
-        wlast = Window.partitionBy(pt_col, "grp").orderBy(F.col("committed_at").desc())
-        m = m.withColumn("_rn", F.row_number().over(wlast)).filter(F.col("_rn") == 1)
-        with _no_aqe(spark):
-            agg = _summary_agg(m)
-    manifest.unpersist()
+    _commit_run(spark, run_path, mpath, run_id, pending_keys, tombstones)
     return {
         "run_id": run_id,
         "groups_total": n_total,
-        "groups_encoded": agg[0] or 0,
-        "groups_failed": agg[1] or 0,
+        **_run_summary(spark, mpath, run_id),
         "groups_skipped": n_total - n_pending,
-        "orig_bytes": agg[2] or 0,
-        "enc_bytes": agg[3] or 0,
-        "n_rows": agg[4] or 0,
+    }
+
+
+def _commit_run(spark: SparkSession, run_path: str, mpath: str, run_id: str,
+                pending_keys: list[tuple[str, str]], tombstones: list[_ManifestRow]) -> None:
+    """Build this run's manifest rows from the group rows that landed in
+    ``run_path`` and append them in ONE write (the commit protocol in the
+    module docstring).  Reading run_path, not the blocks root, keeps an
+    incremental run's job graph on its own output; the explicit schema
+    keeps a directory without part files from failing schema inference."""
+    landed = (
+        spark.read.schema(BLOCKS_DDL_WITH_IDX)
+        .parquet(run_path)
+        .filter(F.col("codec") == GROUP_CODEC)
+        .select("pt", "grp", "n_rows", "orig_bytes", "enc_bytes", "checksum", "meta")
+        .collect()
+    )
+    pending = set(pending_keys)
+    rows: dict[tuple[str, str], _ManifestRow] = {}
+    for g in landed:
+        key = (g["pt"], g["grp"])
+        # a group committed by an earlier attempt of a pinned run_id is not
+        # pending now; its group row must not be appended a second time
+        if key not in pending:
+            continue
+        # a retried pinned run_id leaves the earlier attempt's group row next
+        # to the retry's: a committed copy wins over a stale failure
+        if key not in rows or rows[key].status == "failed":
+            rows[key] = _manifest_row(*key, run_id, g)
+    # salt buckets that received ZERO conversations (hash imbalance on a
+    # small n_salts) have no encode task, hence no group row — without a
+    # committed row they would stay pending and every resume re-run them
+    empties = [_manifest_row(*k, run_id) for k in pending_keys if k not in rows]
+    _append_manifest(spark, mpath, [*rows.values(), *empties, *tombstones])
+
+
+def _run_summary(spark: SparkSession, mpath: str, run_id: str) -> dict:
+    """Totals over the latest manifest row per (pt, grp) of ``run_id``: a
+    replayed epoch / retried pinned run_id re-encodes previously-failed
+    groups and appends committed rows, and the superseded failed rows must
+    not keep counting (a streaming retry would loop forever on
+    groups_failed > 0)."""
+    rows = (
+        spark.read.schema(MANIFEST_DDL)
+        .parquet(mpath)
+        .filter(F.col("run_id") == run_id)
+        .select("pt", "grp", "status", "orig_bytes", "enc_bytes", "n_rows", "committed_at")
+        .collect()
+    )
+    latest = {(r["pt"], r["grp"]): r for r in sorted(rows, key=lambda r: r["committed_at"])}
+    live = latest.values()
+    return {
+        "groups_encoded": sum(r["status"] == "committed" for r in live),
+        "groups_failed": sum(r["status"] == "failed" for r in live),
+        "orig_bytes": sum(r["orig_bytes"] for r in live),
+        "enc_bytes": sum(r["enc_bytes"] for r in live),
+        "n_rows": sum(r["n_rows"] for r in live),
     }
 
 
@@ -879,15 +767,13 @@ def committed_blocks(spark: SparkSession, out_dir: str, as_of=None) -> DataFrame
     # treats as unprunable — instead of failing resolution (or resolving
     # nondeterministically in a mixed old/new dir, where inference samples
     # one file's footer)
-    from .encode import BLOCKS_DDL_WITH_IDX
-
     blocks = (
         spark.read.option("basePath", bpath)
         .schema(BLOCKS_DDL_WITH_IDX + ", run_id string")
         .parquet(bpath)
         .filter(F.col("run_id").isin(live_runs))
     )
-    return blocks.filter(F.col("codec") != ERROR_CODEC).join(
+    return blocks.filter(F.col("codec") != GROUP_CODEC).join(
         F.broadcast(latest), on=["pt", "grp", "run_id"], how="inner"
     )
 
@@ -1017,26 +903,11 @@ def compact_job(
     key_cols = tuple(keyinfo.get("key_cols") or ("conv_id", "turn_idx"))
     conv_col = keyinfo.get("conv_col") or key_cols[0]
 
-    _, mpath, _ = _paths(out_dir)
-    mschema = spark.read.parquet(mpath).schema
-    tombstones = (
-        todo.withColumn("run_id", F.lit(f"{run_id}.ts"))
-        .withColumn("n_blocks", F.lit(0).cast("long"))
-        .withColumn("n_rows", F.lit(0).cast("long"))
-        .withColumn("orig_bytes", F.lit(0).cast("long"))
-        .withColumn("enc_bytes", F.lit(0).cast("long"))
-        .withColumn("codecs", F.lit("[]"))
-        .withColumn("checksum", F.lit(""))
-        .withColumn("status", F.lit("committed"))
-        .withColumn("committed_at", F.current_timestamp())
-        .withColumn("error", F.lit(None).cast("string"))
-        .select(*[f.name for f in mschema.fields])
-    )
     res = encode_job(
         spark, df, out_dir, run_id=run_id, group_prefix=prefix,
         key_cols=key_cols, pt_col=orig_pt, conv_col=conv_col,
         block_rows=block_rows, target_group_rows=target_group_rows,
-        resume=True, _extra_manifest=tombstones,
+        resume=True, _superseded=keys,
     )
     return {
         "run_id": run_id,

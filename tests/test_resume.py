@@ -4,6 +4,9 @@ case the north rule requires."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pandas as pd
 import pytest
 
@@ -150,6 +153,13 @@ def test_resume_uses_persisted_salt_plan(spark, transcripts, tmp_path):
                     max_groups=3)
     plan_stored = load_salt_plan(spark, out)
     assert plan_stored and sum(plan_stored.values()) == r1["groups_total"]
+    # the plan is written to a hidden temp name and renamed into place
+    assert not [f for f in os.listdir(f"{out}/salt_plan") if f.endswith(".tmp")]
+    # a torn part file is skipped, not a reason to discard the whole plan
+    # (which would let the new target remap every group)
+    with open(f"{out}/salt_plan/part-x.parquet", "wb") as fh:
+        fh.write(b"not a parquet file")
+    assert load_salt_plan(spark, out) == plan_stored
     # resume with a very different group-size target: labels must not move
     r2 = encode_job(spark, transcripts, out, run_id="b", target_group_rows=32768)
     assert r2["groups_total"] == r1["groups_total"]
@@ -709,3 +719,119 @@ def test_time_travel_pre_compaction_and_expiry(spark, tmp_path):
     pd.testing.assert_frame_equal(_sorted(full), _sorted(decode_job(spark, out)))
     with pytest.raises(RuntimeError, match="expired"):
         decode_job(spark, out, as_of="t2").count()
+
+
+def _aggregate_manifest(spark, run_path):
+    """Manifest values as a Spark aggregate over a run's raw block rows —
+    the derivation encode_job used before each task emitted a group row.
+    The error is the failed group's message; its manifest form is
+    ``{"error": message}`` JSON."""
+    import pyspark.sql.functions as F
+
+    from bids2table_spark.encode import BLOCKS_DDL_WITH_IDX, GROUP_CODEC
+
+    is_data = F.col("codec") != GROUP_CODEC
+    agg = (
+        spark.read.schema(BLOCKS_DDL_WITH_IDX).parquet(run_path)
+        .groupBy("pt", "grp")
+        .agg(
+            F.sum(is_data.cast("long")).alias("n_blocks"),
+            F.sum(F.when(F.col("col_idx") == 0, F.col("n_rows")).otherwise(0)).alias("n_rows"),
+            F.sum(F.when(is_data, F.col("orig_bytes")).otherwise(0)).alias("orig_bytes"),
+            F.sum(F.when(is_data, F.col("enc_bytes")).otherwise(0)).alias("enc_bytes"),
+            F.to_json(F.array_sort(F.array_distinct(F.collect_list(
+                F.when(is_data, F.concat_ws(":", "column", "codec"))
+            )))).alias("codecs"),
+            F.sha2(F.concat_ws(",", F.sort_array(F.collect_list(
+                F.when(is_data, F.concat_ws(":", "column", "block_id", "checksum"))
+            ))), 256).alias("checksum"),
+            F.max(F.when(~is_data, F.get_json_object("meta", "$.error"))).alias("error"),
+        )
+        .toPandas()
+    )
+    agg["error"] = [
+        json.dumps({"error": e}) if n == 0 and isinstance(e, str) else None
+        for n, e in zip(agg["n_blocks"], agg["error"])
+    ]
+    agg["status"] = ["failed" if e else "committed" for e in agg["error"]]
+    return agg
+
+
+def test_manifest_rows_match_block_aggregate(spark, transcripts, tmp_path):
+    """Every manifest row equals the aggregate over the run's raw blocks:
+    committed groups, failed (poisoned) groups and empty salt buckets."""
+    from bids2table_spark.manifest import load_salt_plan
+
+    out = str(tmp_path / "ref")
+    s = encode_job(spark, transcripts, out, run_id="ref",
+                   plan={"pt-0001/text": "no_such_codec"}, target_group_rows=160)
+    m = read_manifest(spark, out).toPandas().set_index(["pt", "grp"])
+    agg = _aggregate_manifest(spark, f"{out}/blocks/run_id=ref").set_index(["pt", "grp"])
+    universe = {(pt, f"g{i:04d}") for pt, n in load_salt_plan(spark, out).items()
+                for i in range(n)}
+    empties = universe - set(agg.index)
+    assert empties and set(m.index) == universe and len(m) == len(universe)
+    assert 0 < s["groups_failed"] == (agg["status"] == "failed").sum()
+    cols = ["n_blocks", "n_rows", "orig_bytes", "enc_bytes", "codecs",
+            "checksum", "status", "error"]
+    landed = m.loc[agg.index, cols].sort_index()
+    pd.testing.assert_frame_equal(landed, agg[cols].sort_index(), check_dtype=False)
+    gaps = m.loc[sorted(empties), cols]
+    assert (gaps[["n_blocks", "n_rows", "orig_bytes", "enc_bytes"]] == 0).all().all()
+    assert (gaps["codecs"] == "[]").all() and (gaps["checksum"] == "").all()
+    assert (gaps["status"] == "committed").all() and gaps["error"].isna().all()
+
+
+def test_crash_before_manifest_append_retries_clean(spark, transcripts, tmp_path, monkeypatch):
+    """A crash after the blocks landed but before the manifest append, then
+    a retry of the same pinned run_id: one manifest row per group, exact
+    totals, identical decode.  A poisoned pinned run_id re-run with a good
+    plan reports no failed groups (the streaming-replay contract)."""
+    import pyspark.sql.functions as F
+
+    from bids2table_spark import manifest
+
+    real_append = manifest._append_manifest
+    calls = []
+
+    def crash_once(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("simulated crash before the manifest append")
+        return real_append(*args, **kwargs)
+
+    monkeypatch.setattr(manifest, "_append_manifest", crash_once)
+    total = transcripts.count()
+    out = str(tmp_path / "crash")
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        encode_job(spark, transcripts, out, run_id="c", target_group_rows=4096)
+    assert os.listdir(f"{out}/blocks/run_id=c") and read_manifest(spark, out) is None
+    s = encode_job(spark, transcripts, out, run_id="c", target_group_rows=4096)
+    m = read_manifest(spark, out)
+    assert m.count() == s["groups_total"] == s["groups_encoded"]
+    assert m.groupBy("pt", "grp").count().filter(F.col("count") > 1).count() == 0
+    assert s["n_rows"] == total and s["groups_failed"] == 0
+    pd.testing.assert_frame_equal(_sorted(transcripts), _sorted(decode_job(spark, out)))
+
+    out = str(tmp_path / "replay")
+    bad = encode_job(spark, transcripts, out, run_id="p", target_group_rows=4096,
+                     plan={"pt-0001/text": "no_such_codec"})
+    assert bad["groups_failed"] > 0
+    good = encode_job(spark, transcripts, out, run_id="p", target_group_rows=4096)
+    assert good["groups_failed"] == 0
+    assert good["groups_encoded"] == good["groups_total"] and good["n_rows"] == total
+
+
+def test_fresh_encode_job_count(spark, transcripts, tmp_path):
+    """A fresh encode_job schedules at most 7 Spark jobs: the salt-plan
+    count and the encode write (two each under AQE), the group-row collect,
+    the manifest append and the summary read-back."""
+    sc = spark.sparkContext
+    sc.setJobGroup("encode-job-count", "fresh encode_job")
+    try:
+        encode_job(spark, transcripts, str(tmp_path / "jobs"), run_id="j",
+                   target_group_rows=4096)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("encode-job-count")
+    assert 0 < len(jobs) <= 7, sorted(jobs)
